@@ -30,6 +30,7 @@ Scale shape (10^10 frontier, 1000 executors):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 from dataclasses import dataclass
@@ -81,23 +82,14 @@ class CrawlConfig:
     min_content_len: int = 40       # ref min-content gate (newspaper_scraper.py:39)
     max_links_per_page: int = 100   # ref link cap (scraper_gui.py:483-486)
     n_salts: int = 8
+    # URL-seen set (operators/seen): the exact left-anti join on
+    # (url_hash, canon_url), prefiltered by one broadcast bloom when
+    # use_bloom.  The bitset is ~1.8 GB per 10^9 seen keys at fpp 1e-3;
+    # per-bucket executor-side blooms come back only with a workload
+    # whose bitset outgrows a driver broadcast.
     use_bloom: bool = True
     bloom_fpp: float = 1e-3
     bloom_expected: int = 1_000_000  # sizes the cumulative bloom (fixed m)
-    bloom_buckets: int = 1  # >1 → partitioned bucket-aligned blooms
-    # (operators/seen.BloomBucketStore): one bitset per pmod(url_hash, B)
-    # bucket, built and applied on the executors with NO driver-assembled
-    # full bitset — the 10^10-seen shape (a single bloom at 10^10 keys is
-    # ~17 GB, SURVEY §7.3).  1 keeps the single broadcast bloom (fine to
-    # ~10^8 seen; cheapest at sandbox scale).
-    seen_filter: str = "bloom"  # "bloom" | "cuckoo" — the approximate
-    # seen-set structure (north star: "bloom/cuckoo-filter URL-seen
-    # set").  "cuckoo" always runs the partitioned bucket-store path
-    # (bloom_buckets buckets, ≥1) with 16-bit-fingerprint cuckoo blobs:
-    # same no-false-negative contract (stash + saturate degradation),
-    # better fpp per bit at high load, and DELETION — the re-crawl
-    # policy primitive (operators/seen.remove_partitioned_keys) a bloom
-    # cannot offer without a rebuild.
     respect_robots: bool = True
     broadcast_admitted_max: int = 2_000_000  # rows; 0 → let AQE pick the join
     write_partitions: int = 8  # per-round delta files; ~2-3× executors on a cluster
@@ -271,40 +263,6 @@ class FrontierCrawler:
             .agg(F.min("scraper_type").alias("scrape_strategy"))
         )
         self._bloom = None  # cumulative seen bloom, maintained incrementally
-        if config.seen_filter == "cuckoo" or config.bloom_buckets > 1:
-            from .operators.seen import BloomBucketStore, CuckooBucketStore
-
-            # the cuckoo option always runs the partitioned path (its
-            # blob protocol IS the bucket store; n_buckets=1 is fine)
-            cls = CuckooBucketStore if config.seen_filter == "cuckoo" else BloomBucketStore
-            self._bloom_store = cls(
-                os.path.join(store.root, "_blobs", "bloom_buckets"),
-                config.bloom_buckets,
-                max(16, config.bloom_expected // config.bloom_buckets),
-                config.bloom_fpp,
-            )
-        else:
-            self._bloom_store = None
-
-    # ------------------------------------------------------------------
-    def _ensure_partitioned_bloom(self, round_id: int) -> None:
-        """Make every bucket's cumulative blob current through
-        ``round_id - 1`` (cold resume / legacy store: rebuild from the
-        committed seen deltas in one executor-side pass)."""
-        from .operators.seen import advance_partitioned_bloom
-
-        if self._bloom_store.complete(round_id - 1):
-            return
-        seen = self.store.read_rounds(self.spark, "seen", upto=round_id - 1)
-        if seen is None:
-            return
-        # rebuild directly at round_id - 1: drop stale files so the
-        # advance pass starts from empty filters
-        import glob
-
-        for p in glob.glob(os.path.join(self._bloom_store.root, self._bloom_store.file_glob)):
-            os.remove(p)
-        advance_partitioned_bloom(seen, "url_hash", self._bloom_store, round_id - 1)
 
     # ------------------------------------------------------------------
     def _seen_bloom(self, round_id: int):
@@ -313,23 +271,24 @@ class FrontierCrawler:
         Maintained incrementally: bloom_r = bloom_{r-1} ∪ bloom(delta_r)
         (bitset OR is associative), so each round scans only its own
         delta, never the full seen set.  The bitset is checkpointed as a
-        round blob for exact resume; at 10^10 scale the same protocol
-        applies per hash-bucket (partitioned blooms, SURVEY §7.3).
+        round blob for exact resume, named by its geometry: a resume under
+        another (m, k) finds no blob and rebuilds, instead of probing bits
+        the old k never set (false negatives).
         """
         from .operators.seen import NumpyBloom
 
         if self._bloom is not None:
             return self._bloom
-        blob = self.store.load_blob("bloom", round_id - 1)
         proto = NumpyBloom(self.config.bloom_expected, self.config.bloom_fpp)
-        if blob is not None and len(blob) == proto.m // 8:
+        blob = self.store.load_blob(f"bloom.{proto.geometry}", round_id - 1)
+        if blob is not None:
             import numpy as np
 
             self._bloom = NumpyBloom.from_state(
                 np.frombuffer(blob, dtype=np.uint64).copy(), proto.m, proto.k
             )
             return self._bloom
-        # cold start (legacy store or first resume): rebuild from deltas
+        # cold start (legacy store, first resume, new geometry): rebuild
         seen = self.store.read_rounds(self.spark, "seen", upto=round_id - 1)
         if seen is None:
             self._bloom = proto
@@ -341,18 +300,15 @@ class FrontierCrawler:
 
     def _advance_bloom(self, round_id: int) -> None:
         delta = self.store.read_round(self.spark, "seen", round_id)
-        if self._bloom_store is not None:
-            from .operators.seen import advance_partitioned_bloom
-
-            advance_partitioned_bloom(delta, "url_hash", self._bloom_store, round_id)
-            return
         if self._bloom is None:
             self._seen_bloom(round_id)
         delta_bloom = build_bloom(
             delta, "url_hash", self.config.bloom_expected, self.config.bloom_fpp
         )
         self._bloom.union(delta_bloom)
-        self.store.save_blob("bloom", round_id, self._bloom.words.tobytes())
+        self.store.save_blob(
+            f"bloom.{self._bloom.geometry}", round_id, self._bloom.words.tobytes()
+        )
 
     # ------------------------------------------------------------------
     def _build_robots_dim(self) -> DataFrame:
@@ -594,13 +550,6 @@ class FrontierCrawler:
         seen = self.store.read_rounds(self.spark, "seen", upto=round_id - 1)
         if seen is None:
             candidates = frontier
-        elif cfg.use_bloom and self._bloom_store is not None:
-            from .operators.seen import anti_join_seen_partitioned
-
-            self._ensure_partitioned_bloom(round_id)
-            candidates = anti_join_seen_partitioned(
-                frontier, seen, self._bloom_store, round_id - 1, "canon_url", "url_hash"
-            )
         else:
             bloom = self._seen_bloom(round_id) if cfg.use_bloom else None
             candidates = anti_join_seen(frontier, seen, "canon_url", "url_hash", bloom)
@@ -904,22 +853,16 @@ class FrontierCrawler:
         # articles carry the text payload → written at natural (extract)
         # partitioning so no text bytes shuffle; the small metadata deltas
         # get round-robin repartitioned to keep file counts sane.
-        # Optional per-step walls (SPARK_GRAFT_STEP_TIMING=1): each write
-        # job timed separately; "cache_fill" includes the fetch-join +
-        # extraction chain it materializes.  Recorded into the manifest.
+        # Per-step walls, recorded into every manifest: each write job
+        # timed separately; "cache_fill" includes the fetch-join +
+        # extraction chain it materializes.
         steps: dict[str, float] = {}
 
+        @contextlib.contextmanager
         def _timed(name):
-            import contextlib
-
-            @contextlib.contextmanager
-            def cm():
-                s = time.time()
-                yield
-                if os.environ.get("SPARK_GRAFT_STEP_TIMING") == "1":
-                    steps[name] = round(time.time() - s, 3)
-
-            return cm()
+            s = time.time()
+            yield
+            steps[name] = round(time.time() - s, 3)
 
         wp = cfg.write_partitions
         # The articles write is FUSED with the extraction pass: it is the
@@ -1022,8 +965,7 @@ class FrontierCrawler:
 
         stats = {k: int(v or 0) for k, v in {**obs_seen.get, **obs_frontier.get}.items()}
         stats["wall_secs"] = round(time.time() - t0, 3)
-        if steps:
-            stats["step_secs"] = steps
+        stats["step_secs"] = steps
         self.store.commit_round(round_id, stats)
         # unpersist order matters: children (missing, slim) before
         # parents (extracted, admitted, evaluated), so no dependent

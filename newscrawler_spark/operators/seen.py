@@ -1,8 +1,8 @@
-"""URL-seen set: broadcast bloom prefilter + exact anti-join.
+"""URL-seen set: exact anti-join, prefiltered by one broadcast bloom.
 
 The reference's seen set is a per-row ``SELECT ... WHERE url = :url``
 before INSERT (``src/cli.py:72-77``) backed by a UNIQUE index
-(``init-schema.sql:8``).  At 10^10-URL scale the Spark translation is:
+(``init-schema.sql:8``).  The Spark translation is one design:
 
   1. a **bloom filter** over the seen ``url_hash`` values, built
      map-side (one partial bitset per partition, OR-ed on the driver)
@@ -13,16 +13,18 @@ before INSERT (``src/cli.py:72-77``) backed by a UNIQUE index
      60-bit hash collision can never drop a URL — the hash exists to
      make the bloom and the shuffle cheap, the anti-join is the truth.
 
-Scale notes (10^10 frontier): a single bloom for 10^10 hashes at fpp
-1e-3 is ~17 GB — too big for one broadcast.  The structure here extends
-to *partitioned* blooms: bucket both sides by ``pmod(url_hash, B)``,
-build one bloom per bucket, and apply each bloom only to its bucket
-(bucket-aligned, no extra shuffle, each broadcast ~17 GB / B).  The
-sandbox exercises the identical code path with ``n_buckets=1``;
-``n_buckets>1`` is covered by ``tests/test_seen.py``.
+Scale note: the bitset is ~1.8 GB per 10^9 seen keys at fpp 1e-3.
+Partitioning it (one bloom per ``pmod(url_hash, B)`` bucket, built and
+applied on the executors) should return only with a workload whose
+bitset exceeds what the driver can build and broadcast; below that the
+single broadcast bitset is as fast and simpler.
 
-Equivalence contract: ``anti_join_seen(f, s) ≡ f.join(s, keys,
-"left_anti")`` for every input — tested bloom-on vs bloom-off.
+Equivalence contract: ``anti_join_seen(f, s, bloom=b) ≡ f.join(s, keys,
+"left_anti")`` for every input and every bloom that holds ``s``'s
+hashes — tested bloom-on vs bloom-off.  A bloom read under a geometry
+(m, k) other than the one it was built with returns false NEGATIVES,
+which this design cannot recover from; persisted bitsets must therefore
+be keyed by their geometry (see ``FrontierCrawler._seen_bloom``).
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 _MIX = np.uint64(0x9E3779B97F4A7C15)
@@ -55,6 +58,11 @@ class NumpyBloom:
         self.words = (
             words if words is not None else np.zeros(self.m // 64, dtype=np.uint64)
         )
+
+    @property
+    def geometry(self) -> str:
+        """``m{m}k{k}`` — the key under which a persisted bitset is valid."""
+        return f"m{self.m}k{self.k}"
 
     def _probes(self, hashes: np.ndarray) -> Iterator[np.ndarray]:
         h1 = hashes.astype(np.int64).view(np.uint64)
@@ -115,227 +123,6 @@ def build_bloom(seen: DataFrame, hash_col: str, expected: int, fpp: float = 1e-3
     return proto
 
 
-class BloomBucketStore:
-    """Partitioned, bucket-aligned blooms (SURVEY §7.3): one bitset per
-    ``pmod(url_hash, B)`` bucket, stored as shared-storage blobs that
-    EXECUTORS write and read directly — the driver never assembles (or
-    even sees) a full bitset.
-
-    Why: a single bloom for 10^10 hashes at fpp 1e-3 is ~17 GB — too
-    big to build on, hold in, or broadcast from the driver.  Bucketed,
-    each blob is ~17 GB / B; build tasks OR only their buckets' deltas
-    into their buckets' blobs, and apply tasks load only the buckets
-    their rows touch (with the seen/frontier tables bucket-partitioned
-    by the same key in storage — the Iceberg layout — that is exactly
-    one blob per task, fetched once).  In this sandbox the "shared
-    storage" is the store's local _blobs dir (same protocol as the
-    RoundStore manifest blobs); on a cluster it is object-store puts
-    from executors.
-
-    Files are per-round cumulative (``bloomb{b}-{r}.m{m}k{k}.bin``): round r's
-    blob for bucket b = round r-1's ∪ bloom(delta_r ∩ bucket b), so
-    resume reads exactly the committed round's files and a crash
-    mid-build is invisible (next run overwrites round r's files
-    idempotently; commit is the round manifest, as for tables).
-    """
-
-    file_prefix = "bloomb"
-
-    def __init__(self, root: str, n_buckets: int, expected_per_bucket: int, fpp: float):
-        proto = NumpyBloom(expected_per_bucket, fpp)
-        self.root = root
-        self.n_buckets = n_buckets
-        self.m, self.k = proto.m, proto.k
-        self.expected_per_bucket = expected_per_bucket
-        self.fpp = fpp
-
-    @property
-    def file_glob(self) -> str:
-        return f"{self.file_prefix}*.bin"
-
-    def path(self, bucket: int, round_id: int) -> str:
-        import os
-
-        # m/k are part of the filename: blobs written under a different
-        # bloom config (e.g. a resume with a new --bloom-expected) are
-        # simply "not found", so complete() turns false and the caller
-        # rebuilds from the committed seen rounds — reinterpreting a
-        # bitset with the wrong m would produce false NEGATIVES, which
-        # the exact-anti-join-on-positives design cannot recover from.
-        return os.path.join(
-            self.root, f"{self.file_prefix}{bucket}-{round_id}.m{self.m}k{self.k}.bin"
-        )
-
-    def complete(self, round_id: int) -> bool:
-        """True iff every bucket has a blob for ``round_id``."""
-        import os
-
-        return all(
-            os.path.exists(self.path(b, round_id)) for b in range(self.n_buckets)
-        )
-
-    # -- executor-side primitives (no Spark imports at call time) ------
-    def load_bucket(self, bucket: int, round_id: int) -> NumpyBloom:
-        import os
-
-        p = self.path(bucket, round_id)
-        if round_id < 0 or not os.path.exists(p):
-            return NumpyBloom(self.expected_per_bucket, self.fpp)
-        words = np.fromfile(p, dtype=np.uint64)
-        if words.size != self.m // 64:
-            raise ValueError(
-                f"bloom blob {p} has {words.size} words, expected "
-                f"{self.m // 64} — written under a different bloom config"
-            )
-        return NumpyBloom.from_state(words, self.m, self.k)
-
-    def write_bucket(self, bucket: int, round_id: int, bloom: NumpyBloom) -> None:
-        import os
-
-        os.makedirs(self.root, exist_ok=True)
-        p = self.path(bucket, round_id)
-        tmp = p + f".tmp{os.getpid()}"
-        bloom.words.tofile(tmp)
-        os.rename(tmp, p)
-
-
-def _bucket_of(hashes: np.ndarray, n_buckets: int) -> np.ndarray:
-    """pmod(hash, B) with Spark's non-negative-modulo semantics."""
-    return ((hashes.astype(np.int64) % n_buckets) + n_buckets) % n_buckets
-
-
-def advance_partitioned_bloom(
-    seen_delta: DataFrame,
-    hash_col: str,
-    store: BloomBucketStore,
-    round_id: int,
-) -> int:
-    """Advance every bucket's cumulative bloom to ``round_id`` by OR-ing
-    in the round's seen delta — entirely on the executors.
-
-    The delta is repartitioned by bucket (B-way shuffle of the skinny
-    hash column only — on an Iceberg seen table bucket-partitioned by
-    the same key this shuffle disappears; here it moves 8 bytes/row), a
-    skeleton row per bucket guarantees even empty buckets carry their
-    cumulative file forward, and each task loads round r-1's blobs for
-    ITS buckets, ORs, and writes round r's blobs directly.  The driver
-    receives only (bucket, n_added) counters.
-    """
-    spark = seen_delta.sparkSession
-    B = store.n_buckets
-    # skeleton rows use a flag, NOT a null hash — a nullable int64
-    # column arrives in pandas as float64, silently rounding 60-bit
-    # hashes (>2^53) and corrupting the bitset (false negatives, which
-    # unlike false positives break the equivalence contract)
-    skeleton = spark.range(B).select(
-        F.col("id").cast("int").alias("__bucket"),
-        F.lit(0).cast("long").alias("__h"),
-        F.lit(False).alias("__real"),
-    )
-    rows = seen_delta.select(
-        F.pmod(F.col(hash_col), F.lit(B)).cast("int").alias("__bucket"),
-        F.col(hash_col).alias("__h"),
-        F.lit(True).alias("__real"),
-    ).unionByName(skeleton)
-
-    # the store is plain data (paths + geometry) — the closure ships it
-    # to the executors whole; load_bucket/add/write_bucket is the shared
-    # filter-store contract (BloomBucketStore, CuckooBucketStore)
-    st = store
-
-    def advance(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        filters: dict[int, object] = {}
-        counts: dict[int, int] = {}
-        for pdf in it:
-            for b, grp in pdf.groupby("__bucket"):
-                b = int(b)
-                if b not in filters:
-                    filters[b] = st.load_bucket(b, round_id - 1)
-                    counts[b] = 0
-                h = grp.loc[grp["__real"], "__h"].to_numpy(dtype=np.int64)
-                if len(h):
-                    filters[b].add(h)
-                    counts[b] += len(h)
-        for b, filt in filters.items():
-            st.write_bucket(b, round_id, filt)
-        if filters:
-            yield pd.DataFrame(
-                {"bucket": list(filters), "n_added": [counts[b] for b in filters]}
-            )
-
-    stats = (
-        rows.repartition(B, "__bucket")
-        .mapInPandas(advance, schema="bucket int, n_added long")
-        .collect()
-    )
-    return int(sum(r["n_added"] for r in stats))
-
-
-def anti_join_seen_partitioned(
-    frontier: DataFrame,
-    seen: DataFrame,
-    store: BloomBucketStore,
-    round_id: int,
-    url_col: str = "canon_url",
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """Bucket-aligned bloom prefilter + exact anti-join fallback — the
-    partitioned twin of :func:`anti_join_seen` (same equivalence
-    contract, tested bloom-on vs bloom-off).
-
-    The prefilter is applied map-side wherever the frontier rows
-    already are (no extra shuffle); each task lazily loads only the
-    bucket blobs its batch touches, cached per task.  With the frontier
-    bucket-partitioned by the same key in storage (the 10^10 layout)
-    that is exactly one blob per task.
-    """
-    st, n_buckets, rid = store, store.n_buckets, round_id
-
-    def prefilter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, object] = {}
-        for pdf in it:
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
-            out = np.zeros(len(h), dtype=bool)
-            buckets = _bucket_of(h, n_buckets)
-            for b in np.unique(buckets):
-                b = int(b)
-                if b not in cache:
-                    cache[b] = st.load_bucket(b, rid)
-                mask = buckets == b
-                out[mask] = cache[b].might_contain(h[mask])
-            pdf = pdf.copy()
-            pdf["__maybe_seen"] = out
-            yield pdf
-
-    return _prefiltered_anti_join(frontier, seen, prefilter, url_col, hash_col)
-
-
-def _prefiltered_anti_join(
-    frontier: DataFrame,
-    seen: DataFrame,
-    prefilter,
-    url_col: str,
-    hash_col: str,
-) -> DataFrame:
-    """The shared bloom-prefilter contract: ``prefilter`` (a mapInPandas
-    function) tags each row ``__maybe_seen``; negatives bypass the join
-    (a bloom has no false negatives), positives take the EXACT (hash,
-    url) anti-join.  Single copy — both the broadcast-bloom and the
-    bucket-partitioned paths must stay behaviorally identical to the
-    plain left-anti baseline (tested bloom-on vs bloom-off)."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(frontier.schema.fields) + [T.StructField("__maybe_seen", T.BooleanType())]
-    )
-    seen_keys = seen.select(hash_col, url_col).dropDuplicates([hash_col, url_col])
-    tagged = frontier.mapInPandas(prefilter, schema=out_schema)
-    definitely_new = tagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    survivors = maybe.join(seen_keys, on=[hash_col, url_col], how="left_anti")
-    return definitely_new.unionByName(survivors)
-
-
 def anti_join_seen(
     frontier: DataFrame,
     seen: DataFrame,
@@ -345,333 +132,30 @@ def anti_join_seen(
 ) -> DataFrame:
     """Rows of ``frontier`` whose (hash, url) is absent from ``seen``.
 
-    With a bloom: negatives bypass the join; positives take the exact
-    anti-join.  Without: plain left-anti (the correctness baseline).
+    With a bloom: each row is tagged ``__maybe_seen`` map-side against
+    the broadcast bitset; negatives bypass the join (a bloom has no
+    false negatives), positives take the exact anti-join.  Without:
+    plain left-anti (the correctness baseline).
     """
+    seen_keys = seen.select(hash_col, url_col).dropDuplicates([hash_col, url_col])
     if bloom is None:
-        seen_keys = seen.select(hash_col, url_col).dropDuplicates([hash_col, url_col])
         return frontier.join(seen_keys, on=[hash_col, url_col], how="left_anti")
 
-    spark = frontier.sparkSession
-    bc = spark.sparkContext.broadcast((bloom.words, bloom.m, bloom.k))
+    bc = frontier.sparkSession.sparkContext.broadcast((bloom.words, bloom.m, bloom.k))
 
     def prefilter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        words, m, k = bc.value
-        bloom_local = NumpyBloom.from_state(words, m, k)
+        bloom_local = NumpyBloom.from_state(*bc.value)
         for pdf in it:
             h = pdf[hash_col].to_numpy(dtype=np.int64)
             pdf = pdf.copy()
             pdf["__maybe_seen"] = bloom_local.might_contain(h)
             yield pdf
 
-    return _prefiltered_anti_join(frontier, seen, prefilter, url_col, hash_col)
-
-
-# ---------------------------------------------------------------------------
-# Cuckoo-filter seen set — the deletable twin of the bloom path
-# ---------------------------------------------------------------------------
-
-_FP_MIX = np.uint64(0xBF58476D1CE4E5B9)  # splitmix64 finalizer constants
-_FP_MIX2 = np.uint64(0x94D049BB133111EB)
-
-
-def _splitmix(h: np.ndarray) -> np.ndarray:
-    """splitmix64 finalizer — decorrelates the index/fingerprint bits
-    from the raw hash.  Required here: the bucket-store splits keys by
-    ``pmod(url_hash, B)``, so raw low bits are CONSTANT within a blob
-    and indexing by them would collapse every key into m/B buckets."""
-    z = h.astype(np.int64).view(np.uint64).copy()
-    z ^= z >> np.uint64(30)
-    z = (z * _FP_MIX) & _MASK64
-    z ^= z >> np.uint64(27)
-    z = (z * _FP_MIX2) & _MASK64
-    z ^= z >> np.uint64(31)
-    return z
-
-
-class NumpyCuckoo:
-    """Vectorized cuckoo filter over int64 hashes (partial-key cuckoo
-    hashing, Fan et al. 2014): ``m`` power-of-two buckets × 4 slots of
-    16-bit fingerprints.  The north-star names "bloom/cuckoo-filter
-    URL-seen set"; this is the cuckoo half, and its discriminator is
-    **deletion** — a URL due for re-crawl can be REMOVED from the seen
-    filter (re-crawl policy), which a bloom cannot do without a rebuild.
-
-    * fpp ≈ 8/2^16 ≈ 0.012% at 95% load — better than the bloom default
-      at comparable bits/key;
-    * lookup is fully vectorized (two gathers + compares per batch);
-      insert is vectorized first-fit with a Python eviction loop only
-      for the rare overflow items;
-    * **no false negatives, ever**: items whose eviction chain exceeds
-      the retry bound go to a bounded stash (checked by lookups); if the
-      stash fills, the filter flips to ``saturated`` and reports
-      everything as "maybe seen" — degrading to the exact anti-join for
-      all rows, never dropping a seen URL.  (A failed cuckoo insert that
-      was silently forgotten would make the prefilter report a SEEN url
-      as new — the one failure mode the bloom-equivalence contract
-      cannot tolerate.)
-    * deletion caveat (inherent to cuckoo filters): only delete keys
-      known to be present, and at most once per insert — deleting an
-      absent key may evict a colliding key's fingerprint.
-    """
-
-    SLOTS = 4
-    STASH_MAX = 512
-    MAX_KICKS = 500
-
-    def __init__(self, expected: int, m: int | None = None):
-        if m is None:
-            want = max(16, int(expected / (self.SLOTS * 0.95)))
-            m = 1 << (want - 1).bit_length()
-        self.m = m
-        self.table = np.zeros((m, self.SLOTS), dtype=np.uint16)
-        self.stash_b: list[int] = []
-        self.stash_fp: list[int] = []
-        self.saturated = False
-
-    # -- key derivation -------------------------------------------------
-    def _derive(self, hashes: np.ndarray):
-        z = _splitmix(hashes)
-        fp = (z & np.uint64(0xFFFF)).astype(np.uint16)
-        fp = np.where(fp == 0, np.uint16(1), fp)  # 0 marks an empty slot
-        i1 = (z >> np.uint64(16)) % np.uint64(self.m)
-        i2 = i1 ^ self._fp_index(fp)
-        return fp, i1.astype(np.int64), i2.astype(np.int64)
-
-    def _fp_index(self, fp) -> np.ndarray:
-        # partial-key displacement hash: i2 = i1 XOR hash(fp) (mod m);
-        # XOR keeps the pair relation symmetric so eviction can recover
-        # the alternate bucket from (bucket, fp) alone
-        return ((fp.astype(np.uint64) * _MIX) & _MASK64) % np.uint64(self.m)
-
-    # -- insert ---------------------------------------------------------
-    def add(self, hashes: np.ndarray) -> None:
-        if self.saturated or len(hashes) == 0:
-            return
-        fp, i1, i2 = self._derive(hashes)
-        placed = np.zeros(len(fp), dtype=bool)
-        # vectorized first-fit: for each (choice bucket, slot), let the
-        # FIRST unplaced item per bucket claim an empty slot; repeat.
-        # Two sweeps cover the common case; leftovers take the kick loop.
-        for _ in range(2):
-            for idx in (i1, i2):
-                for s in range(self.SLOTS):
-                    cand = np.flatnonzero(~placed & (self.table[idx, s] == 0))
-                    if cand.size == 0:
-                        continue
-                    _, first = np.unique(idx[cand], return_index=True)
-                    winners = cand[first]
-                    self.table[idx[winners], s] = fp[winners]
-                    placed[winners] = True
-            if placed.all():
-                return
-        for j in np.flatnonzero(~placed):
-            self._insert_one(int(fp[j]), int(i1[j]))
-            if self.saturated:
-                return
-
-    def _insert_one(self, fp: int, i1: int) -> None:
-        cur_fp, b = np.uint16(fp), i1
-        for kick in range(self.MAX_KICKS):
-            empty = np.flatnonzero(self.table[b] == 0)
-            if empty.size:
-                self.table[b, empty[0]] = cur_fp
-                return
-            slot = kick % self.SLOTS  # deterministic eviction choice
-            cur_fp, self.table[b, slot] = self.table[b, slot], cur_fp
-            b = int(np.int64(b) ^ np.int64(self._fp_index(np.array([cur_fp], dtype=np.uint16))[0]))
-        if len(self.stash_b) < self.STASH_MAX:
-            self.stash_b.append(b)
-            self.stash_fp.append(int(cur_fp))
-        else:
-            # stash full: degrade to all-maybe (exact join takes over) —
-            # slower, never wrong.  The displaced chain already in the
-            # table stays valid; only lookup behavior changes.
-            self.saturated = True
-
-    # -- lookup ---------------------------------------------------------
-    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        n = len(hashes)
-        if n == 0:
-            return np.zeros(0, dtype=bool)
-        if self.saturated:
-            return np.ones(n, dtype=bool)
-        fp, i1, i2 = self._derive(hashes)
-        out = (self.table[i1] == fp[:, None]).any(axis=1)
-        out |= (self.table[i2] == fp[:, None]).any(axis=1)
-        if self.stash_b:
-            sb = np.asarray(self.stash_b, dtype=np.int64)
-            sf = np.asarray(self.stash_fp, dtype=np.uint16)
-            for k in range(len(sb)):  # stash is tiny (and usually empty)
-                out |= (fp == sf[k]) & ((i1 == sb[k]) | (i2 == sb[k]))
-        return out
-
-    # -- delete ---------------------------------------------------------
-    def remove(self, hashes: np.ndarray) -> int:
-        """Remove one fingerprint occurrence per hash; returns how many
-        were found.  Only call for keys known present (standard cuckoo
-        deletion contract)."""
-        removed = 0
-        if len(hashes) == 0 or self.saturated:
-            return removed
-        fp, i1, i2 = self._derive(hashes)
-        for j in range(len(fp)):
-            done = False
-            for b in (int(i1[j]), int(i2[j])):
-                slots = np.flatnonzero(self.table[b] == fp[j])
-                if slots.size:
-                    self.table[b, slots[0]] = 0
-                    removed += 1
-                    done = True
-                    break
-            if done:
-                continue
-            for k in range(len(self.stash_b)):
-                if self.stash_fp[k] == int(fp[j]) and self.stash_b[k] in (
-                    int(i1[j]),
-                    int(i2[j]),
-                ):
-                    del self.stash_b[k], self.stash_fp[k]
-                    removed += 1
-                    break
-        return removed
-
-    # -- serialization (blob protocol) ----------------------------------
-    def to_bytes(self) -> bytes:
-        head = np.array([len(self.stash_b), int(self.saturated)], dtype=np.uint64)
-        return (
-            head.tobytes()
-            + np.asarray(self.stash_b, dtype=np.int64).tobytes()
-            + np.asarray(self.stash_fp, dtype=np.uint16).tobytes()
-            + self.table.tobytes()
-        )
-
-    @classmethod
-    def from_bytes(cls, blob: bytes, m: int) -> "NumpyCuckoo":
-        head = np.frombuffer(blob[:16], dtype=np.uint64)
-        ns, sat = int(head[0]), bool(head[1])
-        off = 16
-        stash_b = np.frombuffer(blob[off : off + 8 * ns], dtype=np.int64)
-        off += 8 * ns
-        stash_fp = np.frombuffer(blob[off : off + 2 * ns], dtype=np.uint16)
-        off += 2 * ns
-        table = np.frombuffer(blob[off:], dtype=np.uint16)
-        if table.size != m * cls.SLOTS:
-            raise ValueError(
-                f"cuckoo blob has {table.size} slots, expected {m * cls.SLOTS}"
-                " — written under a different filter config"
-            )
-        obj = object.__new__(cls)
-        obj.m = m
-        obj.table = table.reshape(m, cls.SLOTS).copy()
-        obj.stash_b = [int(x) for x in stash_b]
-        obj.stash_fp = [int(x) for x in stash_fp]
-        obj.saturated = sat
-        return obj
-
-
-class CuckooBucketStore:
-    """Partitioned, bucket-aligned cuckoo filters — same blob protocol,
-    sharding and executor-side build/apply as :class:`BloomBucketStore`
-    (one filter per ``pmod(url_hash, B)`` bucket, per-round cumulative
-    files, geometry in the filename), duck-type-compatible with
-    :func:`advance_partitioned_bloom` / :func:`anti_join_seen_partitioned`.
-    The delta vs bloom: per-bucket **deletion** (``remove_bucket_keys``)
-    for re-crawl policy, without rebuilding the filter."""
-
-    file_prefix = "cuckoob"
-
-    def __init__(self, root: str, n_buckets: int, expected_per_bucket: int, fpp: float = 0.0):
-        # fpp accepted for constructor parity; cuckoo fpp is fixed by the
-        # 16-bit fingerprint (≈0.012% at 95% load)
-        proto = NumpyCuckoo(max(16, expected_per_bucket))
-        self.root = root
-        self.n_buckets = n_buckets
-        self.m = proto.m
-        self.expected_per_bucket = expected_per_bucket
-        self.fpp = fpp
-
-    @property
-    def file_glob(self) -> str:
-        return f"{self.file_prefix}*.bin"
-
-    def path(self, bucket: int, round_id: int) -> str:
-        import os
-
-        return os.path.join(
-            self.root, f"{self.file_prefix}{bucket}-{round_id}.m{self.m}.bin"
-        )
-
-    def complete(self, round_id: int) -> bool:
-        import os
-
-        return all(
-            os.path.exists(self.path(b, round_id)) for b in range(self.n_buckets)
-        )
-
-    def load_bucket(self, bucket: int, round_id: int) -> NumpyCuckoo:
-        import os
-
-        p = self.path(bucket, round_id)
-        if round_id < 0 or not os.path.exists(p):
-            return NumpyCuckoo(max(16, self.expected_per_bucket), m=self.m)
-        with open(p, "rb") as f:
-            return NumpyCuckoo.from_bytes(f.read(), self.m)
-
-    def write_bucket(self, bucket: int, round_id: int, filt: NumpyCuckoo) -> None:
-        import os
-
-        os.makedirs(self.root, exist_ok=True)
-        p = self.path(bucket, round_id)
-        tmp = p + f".tmp{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(filt.to_bytes())
-        os.rename(tmp, p)
-
-
-def remove_partitioned_keys(
-    df: DataFrame,
-    hash_col: str,
-    store: CuckooBucketStore,
-    round_id: int,
-) -> int:
-    """Delete ``df``'s hashes from the round's cuckoo blobs, in place
-    (executor-side, bucket-aligned — the same shape as
-    :func:`advance_partitioned_bloom`).  The re-crawl policy primitive:
-    URLs whose re-crawl is due are removed from the seen filter so the
-    next round's prefilter passes them as new; the exact anti-join side
-    must drop the same keys from the seen TABLE (policy does both — the
-    filter and the table stay in lockstep, as for inserts).  Returns the
-    number of fingerprints actually removed."""
-    spark = df.sparkSession
-    B = store.n_buckets
-    rows = df.select(
-        F.pmod(F.col(hash_col), F.lit(B)).cast("int").alias("__bucket"),
-        F.col(hash_col).alias("__h"),
+    out_schema = T.StructType(
+        list(frontier.schema.fields) + [T.StructField("__maybe_seen", T.BooleanType())]
     )
-    st = store
-
-    def drop(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        filters: dict[int, NumpyCuckoo] = {}
-        removed: dict[int, int] = {}
-        for pdf in it:
-            for b, grp in pdf.groupby("__bucket"):
-                b = int(b)
-                if b not in filters:
-                    filters[b] = st.load_bucket(b, round_id)
-                    removed[b] = 0
-                h = grp["__h"].to_numpy(dtype=np.int64)
-                removed[b] += filters[b].remove(h)
-        for b, filt in filters.items():
-            st.write_bucket(b, round_id, filt)
-        if filters:
-            yield pd.DataFrame(
-                {"bucket": list(filters), "n_removed": [removed[b] for b in filters]}
-            )
-
-    stats = (
-        rows.repartition(B, "__bucket")
-        .mapInPandas(drop, schema="bucket int, n_removed long")
-        .collect()
-    )
-    return int(sum(r["n_removed"] for r in stats))
+    tagged = frontier.mapInPandas(prefilter, schema=out_schema)
+    definitely_new = tagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
+    maybe = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
+    survivors = maybe.join(seen_keys, on=[hash_col, url_col], how="left_anti")
+    return definitely_new.unionByName(survivors)

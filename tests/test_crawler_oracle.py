@@ -41,6 +41,10 @@ def test_crawl_order_exact(spark, oracle_result, spark_result):
     want = dict(oracle_result["order"])
     assert len(got) == len(want)
     assert got == want
+    # every committed round records its step walls, unconditionally
+    steps = {"articles", "cache_fill", "seen", "bloom", "crawl_logs", "frontier"}
+    for r in range(store.last_committed_round() + 1):
+        assert set(store.manifest(r)["step_secs"]) == steps
 
 
 def test_seen_set_exact(spark, oracle_result, spark_result):
@@ -102,21 +106,47 @@ def test_robots_denied_never_fetched(spark, spark_result):
     assert articles.filter(F.col("url").contains("/blocked/")).count() == 0
 
 
-def test_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, oracle_result):
-    """Kill after round 1, resume → identical final state (T5/S10)."""
-    store = RoundStore(str(tmp_path_factory.mktemp("store_resume")))
-    cfg2 = CrawlConfig(**{**CFG.__dict__, "max_rounds": 2})
-    FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, cfg2).run(resume=False)
-    assert store.last_committed_round() == 1
-    # resume with full rounds
-    FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, CFG).run(resume=True)
+def _resumed_crawl(spark, corpus, store_dir, first: dict, then: dict):
+    """Crawl 2 rounds under ``CFG | first``, resume to ``CFG | then``;
+    return the crawl order and the sorted (url, status) seen rows."""
     from newscrawler_spark.crawler import read_crawl_order
 
-    got_order = {
-        r["url"]: r["fetch_seq"] for r in read_crawl_order(spark, store).collect()
-    }
-    assert got_order == dict(oracle_result["order"])
-    got_seen = {
-        r["canon_url"]: r["status"] for r in store.read_rounds(spark, "seen").collect()
-    }
-    assert got_seen == oracle_result["seen"]
+    store = RoundStore(store_dir)
+    cfg2 = CrawlConfig(**{**CFG.__dict__, "max_rounds": 2, **first})
+    FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, cfg2).run(resume=False)
+    assert store.last_committed_round() == 1
+    cfg = CrawlConfig(**{**CFG.__dict__, **then})
+    FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, cfg).run(resume=True)
+    order = {r["url"]: r["fetch_seq"] for r in read_crawl_order(spark, store).collect()}
+    seen = sorted(
+        (r["canon_url"], r["status"]) for r in store.read_rounds(spark, "seen").collect()
+    )
+    return order, seen
+
+
+def test_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, oracle_result):
+    """Kill after round 1, resume → identical final state (T5/S10)."""
+    order, seen = _resumed_crawl(
+        spark, corpus, str(tmp_path_factory.mktemp("store_resume")), {}, {}
+    )
+    assert order == dict(oracle_result["order"])
+    assert seen == sorted(oracle_result["seen"].items())
+
+
+def test_resume_under_new_bloom_geometry(spark, corpus, tmp_path_factory, oracle_result):
+    """A resume under a different bloom config must rebuild the bloom,
+    never reread the checkpointed bitset.  (1000, 1e-3) and (750, 1e-4)
+    share m=14400 but have k=10 and k=13: read with the new k, the old
+    bitset reports already-seen URLs as new (false negatives) and they
+    bypass the exact anti-join."""
+    from newscrawler_spark.operators.seen import NumpyBloom
+
+    old, new = NumpyBloom(1000, 1e-3), NumpyBloom(750, 1e-4)
+    assert old.m == new.m and old.k != new.k
+    order, seen = _resumed_crawl(
+        spark, corpus, str(tmp_path_factory.mktemp("store_geometry")),
+        {"bloom_expected": 1000, "bloom_fpp": 1e-3},
+        {"bloom_expected": 750, "bloom_fpp": 1e-4},
+    )
+    assert order == dict(oracle_result["order"])
+    assert seen == sorted(oracle_result["seen"].items())

@@ -59,62 +59,12 @@ def test_anti_join_bloom_equivalence(spark, frontier_and_seen):
     assert len(a) == frontier.count() - seen.count()
 
 
-def test_partitioned_bloom_equivalence(spark, frontier_and_seen, tmp_path):
-    """Bucket-aligned partitioned blooms (B=4) ≡ exact anti-join —
-    the same pure-optimization contract as the single bloom, with the
-    bitsets built/loaded entirely by executor tasks (no driver bitset)."""
-    from newscrawler_spark.operators.seen import (
-        BloomBucketStore,
-        advance_partitioned_bloom,
-        anti_join_seen_partitioned,
-    )
-
-    frontier, seen = frontier_and_seen
-    store = BloomBucketStore(str(tmp_path / "bb"), n_buckets=4,
-                             expected_per_bucket=512, fpp=1e-3)
-    n = advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
-    assert n == seen.count()
-    assert store.complete(0)
-    out = anti_join_seen_partitioned(frontier, seen, store, 0)
-    a = {r["url_hash"] for r in out.collect()}
-    b = {r["url_hash"] for r in anti_join_seen(frontier, seen, bloom=None).collect()}
-    assert a == b
-
-
-def test_partitioned_bloom_incremental_rounds(spark, tmp_path):
-    """Round r's blobs = round r-1's ∪ delta_r, per bucket; empty-delta
-    buckets still carry forward (skeleton rows)."""
-    from pyspark.sql import functions as F
-
-    from newscrawler_spark.operators.seen import (
-        BloomBucketStore,
-        advance_partitioned_bloom,
-        anti_join_seen_partitioned,
-    )
-
-    store = BloomBucketStore(str(tmp_path / "bb"), n_buckets=3,
-                             expected_per_bucket=256, fpp=1e-3)
-    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
-        F.concat(F.lit("u"), "id").alias("canon_url"), F.col("id").alias("url_hash")
-    )
-    advance_partitioned_bloom(mk(0, 60), "url_hash", store, 0)
-    # delta for round 1 hits only bucket 0 (multiples of 3)
-    d1 = mk(60, 120).filter(F.col("url_hash") % 3 == 0)
-    advance_partitioned_bloom(d1, "url_hash", store, 1)
-    assert store.complete(1)  # buckets 1,2 carried forward despite empty delta
-    seen_all = mk(0, 60).unionByName(d1)
-    frontier = mk(0, 200).withColumn("priority", F.lit(1))
-    out = {r["url_hash"] for r in
-           anti_join_seen_partitioned(frontier, seen_all, store, 1).collect()}
-    expect = {r["url_hash"] for r in
-              frontier.join(seen_all, ["url_hash", "canon_url"], "left_anti").collect()}
-    assert out == expect
-
-
-def test_crawler_partitioned_bloom_identical_crawl(spark, tmp_path):
-    """A full crawl with bloom_buckets=4 produces the identical seen set
-    and fetch order as the single-bloom crawl (bloom is pure
-    optimization at every B)."""
+def test_crawler_bloom_modes_identical_crawl(spark, tmp_path):
+    """The bloom is pure optimization: a crawl without it, with the
+    default bloom (almost every row definitely new), and with a tiny one
+    (expected=16: a 256-bit set whose 60 seen keys set 228 bits, so about
+    half of the last round's frontier is a "maybe" and takes the exact
+    join) all produce the identical seen set and fetch order."""
     from newscrawler_spark.crawler import CrawlConfig, FrontierCrawler
     from newscrawler_spark.plans.storage import RoundStore
     from newscrawler_spark.sources.corpus import generate_corpus
@@ -131,7 +81,9 @@ def test_crawler_partitioned_bloom_identical_crawl(spark, tmp_path):
             for r in seen.collect()
         )
 
-    assert crawl("a", bloom_buckets=4) == crawl("b", bloom_buckets=1)
+    exact = crawl("exact", use_bloom=False)
+    assert crawl("bloom") == exact
+    assert crawl("tiny", bloom_expected=16) == exact
 
 
 def test_hash_collision_does_not_drop_urls(spark):
@@ -147,34 +99,3 @@ def test_hash_collision_does_not_drop_urls(spark):
     bloom = build_bloom(seen, "url_hash", expected=16)
     out = [r["canon_url"] for r in anti_join_seen(frontier, seen, bloom=bloom).collect()]
     assert out == ["https://b.com/y"]
-
-
-def test_partitioned_bloom_config_change_invalidates_blobs(spark, tmp_path):
-    """Blobs written under a different bloom geometry must be invisible
-    (complete() false -> caller rebuilds), never reinterpreted: a bitset
-    read with the wrong m yields false NEGATIVES, which the exact-anti-
-    join-on-positives design cannot recover from."""
-    from pyspark.sql import functions as F
-
-    from newscrawler_spark.operators.seen import (
-        BloomBucketStore,
-        advance_partitioned_bloom,
-    )
-
-    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
-        F.concat(F.lit("u"), "id").alias("canon_url"), F.col("id").alias("url_hash")
-    )
-    old = BloomBucketStore(str(tmp_path / "bb"), n_buckets=3,
-                           expected_per_bucket=4096, fpp=1e-3)
-    advance_partitioned_bloom(mk(0, 60), "url_hash", old, 0)
-    assert old.complete(0)
-    # same root, smaller expected -> different m: old blobs must not match
-    new = BloomBucketStore(str(tmp_path / "bb"), n_buckets=3,
-                           expected_per_bucket=256, fpp=1e-3)
-    assert new.m != old.m
-    assert not new.complete(0)
-    # load_bucket under the new geometry returns a FRESH (empty) bloom,
-    # not a misread of the old bitset
-    assert not new.load_bucket(0, 0).might_contain(
-        __import__("numpy").arange(0, 60, 3)
-    ).any()

@@ -28,22 +28,6 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=4)
     ap.add_argument("--budget", type=int, default=10000)
     ap.add_argument("--bloom-expected", type=int, default=1_000_000)
-    ap.add_argument(
-        "--bloom-buckets",
-        type=int,
-        default=1,
-        help="partitioned bucket-aligned seen blooms (>1): the 10^10-seen "
-        "shape — per-bucket bitsets advanced/applied by executor tasks, "
-        "no driver-assembled bitset",
-    )
-    ap.add_argument(
-        "--seen-filter",
-        choices=["bloom", "cuckoo"],
-        default="bloom",
-        help="approximate seen-set structure: 'cuckoo' runs the "
-        "partitioned cuckoo-filter blobs (deletable; re-crawl policy) "
-        "through the same bucket-store protocol as the blooms",
-    )
     ap.add_argument("--warmup-pages")
     ap.add_argument("--warmup-seeds")
     ap.add_argument("--warmup-store")
@@ -117,8 +101,6 @@ def main() -> None:
         round_budget=1_000_000_000 if args.bulk else args.budget,
         n_salts=8,
         bloom_expected=args.bloom_expected,
-        bloom_buckets=args.bloom_buckets,
-        seen_filter=args.seen_filter,
         cache_pages=not args.bulk,          # bulk scans pages exactly once
         repartition_fetched=not args.bulk,  # bulk keeps the scan partitioning
         # Broadcasting the admitted KEYS (≈60 MB/10^6 urls) beats
