@@ -3482,9 +3482,15 @@ FROM m
 """
 
 
-_SQL_CUSUM_DAILY = """
+#: floored epoch day of ``ts`` — DuckDB's integer // truncates toward
+#: zero like Spark's div, so both engines spell the pmod floor form
+_SQL_CUSUM_DAY = """(epoch_us(CAST(ts AS TIMESTAMP))
+          - ((epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000) + 86400000000) % 86400000000)
+         // 86400000000"""
+
+_SQL_CUSUM_DAILY = f"""
   SELECT event_type,
-         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+         {_SQL_CUSUM_DAY} AS day,
          CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS daily_cents
   FROM events GROUP BY 1, 2"""
 
@@ -3500,7 +3506,7 @@ def q_streaming_cusum(spark, sf_dir):
     (cusum_over_daily — CUSUM needs the full day history, so it is
     batch-over-sink by construction; the streaming part is exactly the
     state that must be maintained continuously).  Day ids share the
-    batch path's unix_micros div 86400000000 contract, so the oracle
+    batch path's floored unix_micros / 86400000000 contract, so the oracle
     is the SAME cusum chain over a daily CTE with the finalize cut
     (day end ≤ max(ts) − watermark)."""
     import shutil
@@ -3530,8 +3536,8 @@ def q_streaming_cusum(spark, sf_dir):
 
 SQL_STREAMING_CUSUM = _sql_cusum(
     _SQL_CUSUM_DAILY
-    + """
-  HAVING (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 + 1) * 86400
+    + f"""
+  HAVING ({_SQL_CUSUM_DAY} + 1) * 86400
          <= epoch((SELECT max(ts) FROM events)) - 600"""
 )
 
@@ -4852,16 +4858,37 @@ FROM hist"""
 )
 
 
+_OP_CACHES: dict[str, list] = {}
+
+
+def _fresh_cache_registry(query: str) -> list:
+    """Unpersist the frames the previous call of gate query ``query``
+    persisted, and return an empty registry for this call's operator.
+    A builder cannot unpersist inside its lazy contract (the caller
+    collects later), so each call releases its predecessor's caches
+    instead — one live copy per query per session, not one leaked per
+    bench/gate run (the CLAUDE.md round-cache rule)."""
+    for c in _OP_CACHES.pop(query, []):
+        try:
+            c.unpersist()
+        except Exception:
+            pass
+    return _OP_CACHES.setdefault(query, [])
+
+
 def q_rag_mmr(spark, sf_dir):
     """MMR diversification (operators/rag.mmr_diversify, Carbonell &
     Goldstein 1998): greedy λ-blended relevance/novelty re-rank of the
-    per-query ANN candidate set — k unrolled dataframe stages, each a
-    bounded anti-join + max-penalty aggregate + per-query window; every
+    per-query ANN candidate set — k unrolled steps over one state row
+    per (query, candidate), each a last-pick window + similarity join
+    (running max penalty) + per-query pick window; every
     similarity pinned at 4dp with vec_id tiebreaks so DuckDB replays
     the greedy selection decision-for-decision."""
     from newscrawler_spark.operators.rag import mmr_diversify
 
-    return mmr_diversify(_t(spark, sf_dir, "embeddings"))
+    return mmr_diversify(
+        _t(spark, sf_dir, "embeddings"), cache_registry=_fresh_cache_registry("rag_mmr")
+    )
 
 
 def _sql_rag_mmr(n_queries=4, k=4, n_cand=16, lam=0.7) -> str:
@@ -5021,19 +5048,9 @@ def q_response_cache_evict(spark, sf_dir):
 
     The scalable rank persists a range-partitioned copy of the live
     set (required: repartitionByRange samples bounds, so the counts
-    job and the final read must see ONE materialization).  The caller
-    cannot unpersist inside this lazy contract, so each call REGISTERS
-    its cache and releases the PREVIOUS call's first — bounding the
-    session to one live copy instead of leaking one per bench/gate
-    run (the CLAUDE.md round-cache rule)."""
+    job and the final read must see ONE materialization); it goes into
+    this query's cache registry (_fresh_cache_registry)."""
     from newscrawler_spark.operators.rag import cache_ttl_evict
-
-    for c in _EVICT_CACHES:
-        try:
-            c.unpersist()
-        except Exception:
-            pass
-    _EVICT_CACHES.clear()
 
     ev = _t(spark, sf_dir, "events")
     cache = ev.select(
@@ -5045,11 +5062,11 @@ def q_response_cache_evict(spark, sf_dir):
         ).alias("last_accessed_us"),
     )
     return cache_ttl_evict(
-        cache, ttl_s=7 * 86400, max_size=64, cache_registry=_EVICT_CACHES
+        cache,
+        ttl_s=7 * 86400,
+        max_size=64,
+        cache_registry=_fresh_cache_registry("response_cache_evict"),
     )
-
-
-_EVICT_CACHES: list = []
 
 
 SQL_RESPONSE_CACHE_EVICT = """
@@ -6172,7 +6189,7 @@ def q_graph_pagerank(spark, sf_dir):
 
     _, paths = _crawl_store(spark, sf_dir)
     pages = spark.read.parquet(paths["pages"])
-    return host_pagerank(pages)
+    return host_pagerank(pages, cache_registry=_fresh_cache_registry("graph_pagerank_hosts"))
 
 
 def q_graph_hits(spark, sf_dir):
@@ -6187,7 +6204,7 @@ def q_graph_hits(spark, sf_dir):
 
     _, paths = _crawl_store(spark, sf_dir)
     pages = spark.read.parquet(paths["pages"])
-    return host_hits(pages)
+    return host_hits(pages, cache_registry=_fresh_cache_registry("graph_hits"))
 
 
 def q_graph_seed_depth(spark, sf_dir):
@@ -6204,6 +6221,7 @@ def q_graph_seed_depth(spark, sf_dir):
         spark.read.parquet(paths["pages"]),
         spark.read.parquet(paths["seeds"]),
         hops=4,
+        cache_registry=_fresh_cache_registry("graph_seed_depth"),
     )
 
 
@@ -6220,7 +6238,9 @@ def q_graph_lpa(spark, sf_dir):
 
     _, paths = _crawl_store(spark, sf_dir)
     pages = spark.read.parquet(paths["pages"])
-    return host_label_propagation(pages, iterations=4)
+    return host_label_propagation(
+        pages, iterations=4, cache_registry=_fresh_cache_registry("graph_lpa")
+    )
 
 
 def q_graph_kcore(spark, sf_dir):
@@ -6234,7 +6254,9 @@ def q_graph_kcore(spark, sf_dir):
 
     _, paths = _crawl_store(spark, sf_dir)
     pages = spark.read.parquet(paths["pages"])
-    return page_kcore(pages, k=4, iterations=6)
+    return page_kcore(
+        pages, k=4, iterations=6, cache_registry=_fresh_cache_registry("graph_kcore")
+    )
 
 
 def q_graph_triangles(spark, sf_dir):

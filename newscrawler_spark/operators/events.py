@@ -430,17 +430,22 @@ def cusum_changepoints(events: DataFrame) -> DataFrame:
     cumulative sum and a running minimum, two frames over ONE
     per-type-ordered exchange.  All integer arithmetic: daily sums in
     cents; the drift allowance k = per-type mean daily cents via the
-    sign-safe pinned floor-div (total - pmod(total, n)) / n (Spark DIV
-    truncates toward zero while DuckDB // floors — they diverge on
-    negative totals, so the pmod form is spelled in both engines);
-    alarm when S_i exceeds k (one mean day of accumulated drift).
+    sign-safe pinned floor-div (total - pmod(total, n)) / n; alarm when
+    S_i exceeds k (one mean day of accumulated drift).  The day id is
+    the same floor form, (us - pmod(us, 86400e6)) div 86400e6: integer
+    division truncates toward zero (Spark DIV, and DuckDB's // too), so
+    a plain div would put a pre-1970 event in day 0 while the streaming
+    twin's day window starts at the floored day.
 
     Scale shape: one groupBy to the per-(type, day) table (map-side
     combined), then whole-frame + ordered windows over that aggregate
     (days × types rows, never event rows) on a single event_type
     exchange.  Returns (event_type, day, daily_cents, k_target,
     cusum_pos, is_alarm)."""
-    day = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000")
+    day = F.expr(
+        "(unix_micros(CAST(ts AS TIMESTAMP)) - pmod(unix_micros(CAST(ts AS TIMESTAMP)), "
+        "86400000000)) div 86400000000"
+    )
     cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.select("event_type", day.cast("long").alias("day"), cents.alias("cents"))

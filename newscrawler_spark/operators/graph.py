@@ -90,6 +90,15 @@ def connected_components(
 _HOST_RE = r"^[a-z]+://([^/?#]*)"
 
 
+def _persist(df: DataFrame, cache_registry: list | None) -> DataFrame:
+    """``df.persist()``, recorded in ``cache_registry`` (when given) so
+    the caller can unpersist it once the result is consumed."""
+    df = df.persist()
+    if cache_registry is not None:
+        cache_registry.append(df)
+    return df
+
+
 def host_link_edges(pages: DataFrame, max_links_per_page: int = 100) -> DataFrame:
     """Host-level link graph from the raw pages table.
 
@@ -134,6 +143,7 @@ def host_pagerank(
     damping_pct: int = 85,
     scale: int = 1_000_000,
     max_links_per_page: int = 100,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Integer-exact PageRank over the host link graph — the classic
     frontier-prioritization signal (Page et al. 1999; OPIC, Abiteboul
@@ -160,11 +170,12 @@ def host_pagerank(
     Scale: rank iterations run on the host graph (~10^7 rows at
     100 TB), never on pages; each iteration is a broadcast join of the
     |hosts|-row rank vector against the persisted edges plus one
-    groupBy(dst) on the host graph.
+    groupBy(dst) on the host graph.  ``cache_registry`` collects the
+    two persisted edge frames for the caller to release.
     """
-    edges = host_link_edges(pages, max_links_per_page).persist()
+    edges = _persist(host_link_edges(pages, max_links_per_page), cache_registry)
     outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("outw"))
-    ew = edges.join(outw, "src").persist()
+    ew = _persist(edges.join(outw, "src"), cache_registry)
     hosts = pages.select(
         F.regexp_extract("url", _HOST_RE, 1).alias("host")
     ).distinct()
@@ -264,6 +275,7 @@ def host_hits(
     iterations: int = 3,
     scale: int = 1_000_000,
     max_links_per_page: int = 100,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Integer-exact HITS hubs & authorities over the host link graph
     (Kleinberg, JACM 1999) — PageRank's companion signal: authorities
@@ -292,11 +304,12 @@ def host_hits(
     unrolled iteration is two broadcast joins of the |hosts|-row score
     vector into the edges plus two host-bounded groupBys; the
     normalizing max is a whole-frame window over the AGGREGATE (never
-    corpus rows — the domain_mix lesson, PLANS.md).
+    corpus rows — the domain_mix lesson, PLANS.md).  ``cache_registry``
+    collects the persisted edge aggregate for the caller to release.
     """
     from pyspark.sql import Window
 
-    edges = host_link_edges(pages, max_links_per_page).persist()
+    edges = _persist(host_link_edges(pages, max_links_per_page), cache_registry)
     hosts = pages.select(
         F.regexp_extract("url", _HOST_RE, 1).alias("host")
     ).distinct()
@@ -563,6 +576,7 @@ def host_label_propagation(
     pages: DataFrame,
     iterations: int = 4,
     max_links_per_page: int = 100,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al.
     2007) over the undirected weighted host graph — community
@@ -581,38 +595,39 @@ def host_label_propagation(
     discipline as PageRank/HITS (the oracle replays the same unroll,
     so engines agree even before convergence).
 
-    Scale: every round is one join of the |hosts|-row label vector
-    (broadcast) against the persisted undirected host-edge aggregate +
-    one groupBy(host, label) — O(host-graph), never O(pages); the
-    extraction pass runs once.
+    The self-vote is a static weight-1 self-loop per host, unioned
+    once into the persisted undirected host-edge aggregate, so a round
+    reads the previous round's labels exactly once: one broadcast join
+    of the |hosts|-row label vector against the edges + one
+    groupBy(host, label) + the argmax window.  The optimized plan grows
+    linearly with ``iterations``; every round is O(host-graph), never
+    O(pages), and the extraction pass runs once.  ``cache_registry``
+    collects the persisted edge set for the caller to release.
 
     Returns (host, community, community_size)."""
     from pyspark.sql import Window
 
     edges = host_link_edges(pages, max_links_per_page)
+    hosts = pages.select(
+        F.regexp_extract("url", _HOST_RE, 1).alias("host")
+    ).distinct()
     und = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"), "w")
         .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b"), "w"))
         .groupBy("a", "b")
         .agg(F.sum("w").cast("bigint").alias("w"))
-        .persist()
     )
-    hosts = pages.select(
-        F.regexp_extract("url", _HOST_RE, 1).alias("host")
-    ).distinct()
+    self_loops = hosts.select(
+        F.col("host").alias("a"), F.col("host").alias("b"), F.lit(1).cast("bigint").alias("w")
+    )
+    voters = _persist(und.unionByName(self_loops), cache_registry)
     labels = hosts.select("host", F.col("host").alias("label"))
     pick = Window.partitionBy("host").orderBy(F.desc("votes"), F.asc("label"))
     for _ in range(iterations):
-        nb = und.join(
-            F.broadcast(labels.withColumnRenamed("host", "b")), "b"
-        ).select(F.col("a").alias("host"), "label", F.col("w").alias("votes"))
-        self_votes = labels.select(
-            "host", "label", F.lit(1).cast("bigint").alias("votes")
-        )
         agg = (
-            nb.unionByName(self_votes)
-            .groupBy("host", "label")
-            .agg(F.sum("votes").cast("bigint").alias("votes"))
+            voters.join(F.broadcast(labels.withColumnRenamed("host", "b")), "b")
+            .groupBy(F.col("a").alias("host"), "label")
+            .agg(F.sum("w").cast("bigint").alias("votes"))
         )
         labels = (
             agg.withColumn("_rk", F.row_number().over(pick))
@@ -630,6 +645,7 @@ def host_seed_depth(
     seeds: DataFrame,
     hops: int = 4,
     max_links_per_page: int = 100,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Shortest directed link-distance from the SEED hosts, capped at
     ``hops`` — the link-graph complement of the crawl's round-depth
@@ -647,15 +663,29 @@ def host_seed_depth(
     so unlike k-core there is no convergence to witness — hosts beyond
     the cap are absent by definition.
 
-    Scale: each hop is one broadcast of the |reached-hosts|-row
-    distance vector against the persisted host-edge aggregate + one
-    groupBy(host) min — O(host-graph) per hop, pages scanned once.
+    The host edges carry cost 1 and every host gets a cost-0
+    self-loop, so d_k(v) = min over (edges ∪ loops) of
+    d_{k-1}(u) + cost: each hop reads the previous distance vector
+    exactly once — one broadcast join of the |reached-hosts|-row
+    vector against the edges + loops + one groupBy(host) min.
+    The optimized plan grows linearly with ``hops``; the extraction
+    pass runs once.  ``cache_registry`` collects the persisted
+    host-edge aggregate for the caller to release.
 
     Returns (host, depth) for hosts reached within ``hops``."""
-    edges = host_link_edges(pages, max_links_per_page).persist()
+    edges = _persist(host_link_edges(pages, max_links_per_page), cache_registry)
     hosts = pages.select(
         F.regexp_extract("url", _HOST_RE, 1).alias("host")
     ).distinct()
+    # the loops stay lazy: their host scan is the one the seed filter
+    # below runs, and the plan reuses that exchange
+    hop_edges = edges.select("src", "dst", F.lit(1).cast("long").alias("cost")).unionByName(
+        hosts.select(
+            F.col("host").alias("src"),
+            F.col("host").alias("dst"),
+            F.lit(0).cast("long").alias("cost"),
+        )
+    )
     dist = (
         seeds.select(F.col("domain").alias("host"))
         .distinct()
@@ -663,16 +693,10 @@ def host_seed_depth(
         .select("host", F.lit(0).cast("long").alias("depth"))
     )
     for _ in range(hops):
-        stepped = (
-            edges.join(
-                F.broadcast(dist.withColumnRenamed("host", "src")), "src"
-            )
-            .select(F.col("dst").alias("host"), (F.col("depth") + 1).alias("depth"))
-        )
         dist = (
-            dist.unionByName(stepped)
-            .groupBy("host")
-            .agg(F.min("depth").cast("long").alias("depth"))
+            hop_edges.join(F.broadcast(dist.withColumnRenamed("host", "src")), "src")
+            .groupBy(F.col("dst").alias("host"))
+            .agg(F.min(F.col("depth") + F.col("cost")).cast("long").alias("depth"))
         )
     return dist
 
@@ -682,49 +706,64 @@ def kcore_from_edges(
     k: int = 4,
     iterations: int = 6,
     verify_convergence: bool = True,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """k-core peel over a symmetrized distinct (a, b) edge set — the
     unrolled loop shared by :func:`page_kcore` and the synthetic-graph
-    tests.  See page_kcore for semantics and scale shape.
+    tests.  See page_kcore for semantics.
 
-    ``verify_convergence`` runs ONE extra peel after the unroll and
-    compares the two core sizes (two bounded scalar counts over
-    localCheckpointed vertex sets — no row-scaled driver state).
-    Peeling depth grows with graph structure: a fixed unroll that was
-    fixpoint-deep on the test corpus can silently return a SUPERSET of
-    the true core at 100× (under-peeling admits link-farm chains), so
-    non-convergence raises loudly instead of shipping a wrong cut."""
-    und = und.localCheckpoint(eager=True)
-    core = und.select(F.col("a").alias("v")).distinct()
+    The peel runs on the EDGE set, lazily: an edge survives a round
+    while both endpoint degrees are ≥ ``k``, the two degrees coming
+    from count windows partitioned by ``a`` and by ``b`` (the edge set
+    is symmetric, so the count over ``b`` is b's degree).  Each round
+    reads the previous edge set once and the optimized plan grows
+    linearly with ``iterations``; building the frame runs no job.  The
+    last round is fused with the final per-vertex aggregate: its rows
+    are the core members (degree ≥ k in the previous round), each with
+    ``core_degree`` = the count of its surviving edges.
 
-    def _peel(cur: DataFrame) -> DataFrame:
-        return (
-            und.join(cur.select(F.col("v").alias("ca")), und["a"] == F.col("ca"))
-            .join(cur.select(F.col("v").alias("cb")), und["b"] == F.col("cb"))
-            .groupBy("a")
-            .agg(F.count(F.lit(1)).alias("deg"))  # und is distinct pairs
-            .where(F.col("deg") >= k)
-            .select(F.col("a").alias("v"))
-            .localCheckpoint(eager=True)
+    ``verify_convergence`` reads that aggregate once (the one eager
+    action, persisted for the result): the members whose core degree is
+    below ``k`` are exactly what one more peel would remove, so any
+    such member raises.  Peeling depth grows with graph structure: a
+    fixed unroll that was fixpoint-deep on the test corpus can
+    silently return a SUPERSET of the true core at 100× (under-peeling
+    admits link-farm chains), so non-convergence raises loudly instead
+    of shipping a wrong cut.  ``cache_registry`` collects that
+    persisted aggregate for the caller to release."""
+    from pyspark.sql import Window
+
+    by_a, by_b = Window.partitionBy("a"), Window.partitionBy("b")
+
+    def _with_degrees(e: DataFrame) -> DataFrame:
+        return e.withColumn("_da", F.count(F.lit(1)).over(by_a)).withColumn(
+            "_db", F.count(F.lit(1)).over(by_b)
         )
 
-    for _ in range(iterations):
-        core = _peel(core)
-    if verify_convergence:
-        n_before = core.count()
-        if n_before > 0:
-            delta = n_before - _peel(core).count()
-            if delta != 0:
-                raise RuntimeError(
-                    f"k-core peel not converged after {iterations} unrolled "
-                    f"rounds (one more peel removed {delta} of {n_before} "
-                    f"vertices) — raise `iterations` for this graph"
-                )
-    return (
-        und.join(core.select(F.col("v").alias("ca")), und["a"] == F.col("ca"))
-        .join(core.select(F.col("v").alias("cb")), und["b"] == F.col("cb"))
+    e = und.select("a", "b")
+    for _ in range(iterations - 1):
+        e = _with_degrees(e).where((F.col("_da") >= k) & (F.col("_db") >= k)).select("a", "b")
+    # iterations=0 peels nothing: every vertex is a member, every edge survives
+    cut = k if iterations > 0 else 0
+    members = (
+        _with_degrees(e)
+        .where(F.col("_da") >= cut)
         .groupBy("a")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
+        .agg(F.count(F.when(F.col("_db") >= cut, 1)).cast("long").alias("core_degree"))
+    )
+    if verify_convergence:
+        members = _persist(members, cache_registry)
+        n_before, delta = members.agg(
+            F.count(F.lit(1)), F.count(F.when(F.col("core_degree") < k, 1))
+        ).first()
+        if n_before > 0 and delta != 0:
+            raise RuntimeError(
+                f"k-core peel not converged after {iterations} unrolled "
+                f"rounds (one more peel removed {delta} of {n_before} "
+                f"vertices) — raise `iterations` for this graph"
+            )
+    return (
+        members.where(F.col("core_degree") > 0)
         .select(F.col("a").alias("url"), "core_degree")
         .orderBy("url")
     )
@@ -736,6 +775,7 @@ def page_kcore(
     iterations: int = 6,
     max_links_per_page: int = 100,
     verify_convergence: bool = True,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """k-core decomposition of the page link graph (Seidman 1983) —
     the graph-curation cut that keeps pages embedded in a densely
@@ -746,14 +786,15 @@ def page_kcore(
     ``k`` surviving neighbors, repeat.  Peeling is monotone, so round
     i+1's core ⊆ round i's; on bounded-cascade graphs a small fixed
     unroll reaches the fixpoint, and ``verify_convergence`` (default
-    on) PROVES it per run with one extra peel + scalar compare,
-    raising loudly on under-peel instead of returning a superset core
-    (see kcore_from_edges).  The DuckDB oracle replays the SAME fixed
+    on) PROVES it per run from the final aggregate, raising loudly on
+    under-peel instead of returning a superset core (see
+    kcore_from_edges).  The DuckDB oracle replays the SAME fixed
     unroll, so the two engines agree by construction even before the
-    fixpoint.  Each round is one join-filter-aggregate over the
-    materialized undirected edge set — localCheckpoint per round keeps
-    lineage linear (the connected_components pattern); shuffle cost is
-    rounds × one edge-keyed exchange, never vertex-quadratic.
+    fixpoint.  Each round is two count windows (partitioned by either
+    endpoint) and a filter over the surviving undirected edge set —
+    one lazy chain whose plan grows linearly with ``iterations``;
+    shuffle cost is rounds × two edge-keyed exchanges, never
+    vertex-quadratic, and the witness is the only eager action.
 
     Returns (url, core_degree) for core members — degree counted
     within the final core."""
@@ -762,4 +803,5 @@ def page_kcore(
         k=k,
         iterations=iterations,
         verify_convergence=verify_convergence,
+        cache_registry=cache_registry,
     )

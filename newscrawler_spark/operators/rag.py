@@ -332,6 +332,7 @@ def mmr_diversify(
     k: int = 4,
     n_cand: int = 16,
     lam: float = MMR_LAMBDA,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998) over retrieved candidates: for each query, greedily pick the
@@ -339,12 +340,23 @@ def mmr_diversify(
     the diversity pass between ANN retrieval and context assembly.
 
     Spark-first, NO per-query driver loop and no UDF: the k greedy
-    rounds are k UNROLLED dataframe stages, each a bounded anti-join +
-    max-penalty aggregate + one-row-per-query window over the cached
-    (query × n_cand) candidate relation — every query's selection runs
-    in parallel inside each stage, so 10^9 queries scale horizontally
-    while k stays the (small) sequential depth, exactly like the
-    unrolled PageRank iterations (operators/graph.py).
+    rounds are k UNROLLED steps over one state row per cached
+    (query, candidate) pair holding rel, mmr_rank/mmr_score once
+    picked, and the running max penalty ``pen`` while unpicked.  A
+    step reads the previous state exactly once: a per-query window
+    finds the last pick, one left join to the pairwise similarities
+    gives sim(c, last pick) and ``pen = greatest(pen, s)`` (a running
+    max equals the max over the selected set), and a row_number over
+    the unpicked rows takes the next pick — so the optimized plan
+    grows linearly in k.  Every query's selection runs inside each
+    step, but the operator is sized for a handful of queries: the
+    candidates (n_queries × n_cand rows) and the pairwise similarities
+    (up to (n_queries·n_cand)² rows) each sit in one partition, and
+    the join strategy is left to the planner (AQE broadcasts the
+    similarities when they are small).  A query with fewer than k
+    candidates gets one rank per candidate.
+    ``cache_registry`` collects the two persisted frames (candidates,
+    pairwise similarities) for the caller to release.
 
     Cross-engine contract: every similarity is pinned-rounded at 4dp
     BEFORE any comparison and every argmax tie breaks by vec_id, so
@@ -400,47 +412,52 @@ def mmr_diversify(
         .persist()
     )
 
-    cand_slim = cand.drop("cv")
-    sel = (
-        cand_slim.withColumn(
-            "rn", F.row_number().over(w_q.orderBy(F.desc("rel"), "vec_id"))
-        )
-        .where(F.col("rn") == 1)
-        .select(
-            "qid",
-            F.lit(1).alias("mmr_rank"),
-            "vec_id",
-            pinned_round(F.lit(lam) * F.col("rel"), 4).alias("mmr_score"),
-        )
+    if cache_registry is not None:
+        cache_registry.extend([cand, ps])
+
+    # one state row per (qid, candidate): rank and score once picked,
+    # the running max similarity to the picked set while unpicked
+    w_pick = w_q.orderBy(F.col("mmr_rank").isNotNull(), F.desc("mmr_score"), "vec_id")
+    first = F.row_number().over(w_q.orderBy(F.desc("rel"), "vec_id")) == 1
+    state = cand.select(
+        "qid",
+        "vec_id",
+        "rel",
+        F.when(first, F.lit(1)).alias("mmr_rank"),
+        F.when(first, pinned_round(F.lit(lam) * F.col("rel"), 4)).alias("mmr_score"),
+        F.lit(None).cast("double").alias("pen"),
     )
     for step in range(2, k + 1):
-        su = sel.select("qid", "vec_id")
-        rem = cand_slim.join(su, ["qid", "vec_id"], "left_anti")
-        pen = (
-            rem.join(su.withColumnRenamed("vec_id", "svid"), "qid")
+        last = F.max(F.when(F.col("mmr_rank") == step - 1, F.col("vec_id"))).over(w_q)
+        unpicked = F.col("mmr_rank").isNull()
+        pen = F.greatest("pen", "s")
+        mmr = pinned_round(F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * pen, 4)
+        scored = (
+            state.withColumn("last", last)
             .join(
                 ps,
-                (F.col("vec_id") == F.col("va")) & (F.col("svid") == F.col("vb")),
+                (F.col("vec_id") == F.col("va")) & (F.col("last") == F.col("vb")),
+                "left",
             )
-            .groupBy("qid", "vec_id", "rel")
-            .agg(F.max("s").alias("pen"))
-        )
-        mmr = pinned_round(
-            F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.col("pen"), 4
-        )
-        pick = (
-            pen.select("qid", "vec_id", mmr.alias("mmr_score"))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    w_q.orderBy(F.desc("mmr_score"), "vec_id")
-                ),
+            .select(
+                "qid",
+                "vec_id",
+                "rel",
+                "mmr_rank",
+                F.when(unpicked, mmr).otherwise(F.col("mmr_score")).alias("mmr_score"),
+                pen.alias("pen"),
             )
-            .where(F.col("rn") == 1)
-            .select("qid", F.lit(step).alias("mmr_rank"), "vec_id", "mmr_score")
         )
-        sel = sel.unionByName(pick)
-    return sel
+        # unpicked rows sort first, so row 1 is the pick unless none is left
+        state = scored.withColumn(
+            "mmr_rank",
+            F.when(unpicked & (F.row_number().over(w_pick) == 1), F.lit(step)).otherwise(
+                F.col("mmr_rank")
+            ),
+        )
+    return state.where(F.col("mmr_rank").isNotNull()).select(
+        "qid", "mmr_rank", "vec_id", "mmr_score"
+    )
 
 
 def cache_ttl_evict(

@@ -397,8 +397,8 @@ def windowed_daily_cents(
     sum: the streaming maintenance of the daily aggregate the CUSUM
     changepoint detector consumes (operators/events.cusum_over_daily).
     Integer cents (the repo-wide no-raw-double-sum discipline); the
-    day id is the same unix_micros div 86400000000 contract as the
-    batch path, so the streaming sink rows are row-identical to the
+    day id is the same floored unix_micros / 86400000000 contract as
+    the batch path, so the streaming sink rows are row-identical to the
     batch daily aggregate over the finalized horizon."""
     stream = spark.readStream.schema(schema).parquet(events_dir)
     return (
@@ -410,6 +410,7 @@ def windowed_daily_cents(
             .alias("daily_cents")
         )
         .select(
+            # win.start is day-aligned, so plain div is already the floor
             F.expr("unix_micros(win.start) div 86400000000")
             .cast("long")
             .alias("day"),

@@ -48,6 +48,38 @@ def test_cusum_matches_recursion_and_alarms(spark):
     assert any(post_alarm)
 
 
+def test_cusum_day_floors_pre_epoch_events(spark):
+    """An event 12 h before the epoch belongs to day −1, not day 0:
+    the day id is floored in Spark and in the DuckDB oracle alike
+    (integer division truncates toward zero in both engines)."""
+    import duckdb
+
+    from __spark_entry__ import SQL_EVENTS_CUSUM
+
+    rows = [
+        (1, "1969-12-31 12:00:00", 1, "metric", 1.0, "{}"),
+        (2, "1970-01-01 12:00:00", 1, "metric", 2.0, "{}"),
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = sorted(tuple(r) for r in cusum_changepoints(ev).collect())
+    assert [(d, c) for _, d, c, *_ in got] == [(-1, 100), (0, 200)]
+
+    con = duckdb.connect()
+    try:
+        con.execute("SET TimeZone = 'UTC'")
+        con.execute(
+            "CREATE TABLE events AS SELECT * FROM (VALUES "
+            + ", ".join(f"({i}, TIMESTAMP '{ts}', {u}, '{t}', {v}, '{p}')" for i, ts, u, t, v, p in rows)
+            + ") t(event_id, ts, user_id, event_type, value, props)"
+        )
+        want = sorted(con.sql(SQL_EVENTS_CUSUM).fetchall())
+    finally:
+        con.close()
+    assert got == want
+
+
 def test_containment_catches_subdocument_copy(spark):
     """A short doc fully embedded in a long one: containment ≈ 1.0
     while jaccard is diluted below threshold — the operator's reason

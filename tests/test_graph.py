@@ -472,6 +472,32 @@ def test_kcore_convergence_witness_deep_cascade(spark):
     }
 
 
+@pytest.mark.parametrize(
+    "edges, k, iterations, removed",
+    [
+        # path v0..v19 at k=2 loses its two ends per peel: 20 → 18 → 16 → 14
+        ([(f"v{i}", f"v{i + 1}") for i in range(19)], 2, 3, "removed 2 of 14 vertices"),
+        ([(f"v{i}", f"v{i + 1}") for i in range(19)], 2, 1, "removed 2 of 18 vertices"),
+        ([(f"v{i}", f"v{i + 1}") for i in range(19)], 2, 0, "removed 2 of 20 vertices"),
+        # a star's centre survives one peel with every neighbour gone:
+        # it is a core member with no surviving edge, and counts
+        ([("s", f"l{i}") for i in range(3)], 2, 1, "removed 1 of 1 vertices"),
+    ],
+)
+def test_kcore_witness_message_counts(spark, edges, k, iterations, removed):
+    """The non-convergence message reports how many vertices one more
+    peel removes out of the current core (values pinned from the
+    vertex-set peel this edge-set peel replaced)."""
+    from newscrawler_spark.operators.graph import kcore_from_edges
+
+    und = spark.createDataFrame(edges + [(b, a) for a, b in edges], "a string, b string")
+    with pytest.raises(RuntimeError, match=f"after {iterations} unrolled rounds .*{removed}"):
+        kcore_from_edges(und, k=k, iterations=iterations)
+    # unverified, the same cut returns only members that keep an edge
+    got = kcore_from_edges(und, k=k, iterations=iterations, verify_convergence=False).collect()
+    assert all(r["core_degree"] > 0 for r in got)
+
+
 def test_lpa_matches_pure_python_and_clusters(spark, tmp_path):
     """host_label_propagation vs an independent pure-Python replay of
     the frozen rule (edge-weight votes + self-vote, argmax then lex-min,

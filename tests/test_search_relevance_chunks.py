@@ -393,6 +393,23 @@ def test_mmr_matches_python_greedy_spec(spark, emb):
         assert abs(r["mmr_score"] - s) < 1e-12
 
 
+@pytest.mark.parametrize("n_cand, k", [(3, 5), (1, 2)])
+def test_mmr_fewer_candidates_than_k(spark, emb, n_cand, k):
+    """With n_cand < k every candidate is picked once (ranks 1..n_cand
+    per query) and the steps past the last candidate pick nothing: the
+    output equals the k = n_cand run."""
+    from newscrawler_spark.operators.rag import mmr_diversify
+
+    got = sorted(tuple(r) for r in mmr_diversify(emb, n_cand=n_cand, k=k).collect())
+    want = sorted(tuple(r) for r in mmr_diversify(emb, n_cand=n_cand, k=n_cand).collect())
+    assert got == want
+    ranks: dict = {}
+    for qid, rank, _, _ in got:
+        ranks.setdefault(qid, []).append(rank)
+    assert sorted(ranks) == [0, 1, 2, 3]
+    assert all(sorted(r) == list(range(1, n_cand + 1)) for r in ranks.values())
+
+
 def test_tfidf_topk_matches_python_spec(spark):
     import math
     import re

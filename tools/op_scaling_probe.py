@@ -184,6 +184,9 @@ def main() -> None:
             f"opscale_attrib_{_stream_n[0]}",
         )
 
+    # frames HITS and MMR persist, released after each leg so
+    # a repeat neither reuses the previous leg's cache nor leaks it
+    caches: list = []
     OPS = {
         "dedup_winnow_pairs": (
             lambda: winnow_pairs(docs(inputs["docs_1x"])),
@@ -198,8 +201,8 @@ def main() -> None:
             lambda: _clusters(docs(inputs["docs_2x"])),
         ),
         "graph_hits": (
-            lambda: host_hits(spark.read.parquet(corpus_1x["pages"])),
-            lambda: host_hits(spark.read.parquet(corpus_2x["pages"])),
+            lambda: host_hits(spark.read.parquet(corpus_1x["pages"]), cache_registry=caches),
+            lambda: host_hits(spark.read.parquet(corpus_2x["pages"]), cache_registry=caches),
         ),
         # docs_2j (disjoint copy vocab), max_df=100 — the gate's capped
         # candidate path; see _build_inputs for why reversed copies
@@ -213,8 +216,8 @@ def main() -> None:
             ),
         ),
         "rag_mmr": (
-            lambda: mmr_diversify(docs(inputs["emb_1x"])),
-            lambda: mmr_diversify(docs(inputs["emb_2x"])),
+            lambda: mmr_diversify(docs(inputs["emb_1x"]), cache_registry=caches),
+            lambda: mmr_diversify(docs(inputs["emb_2x"]), cache_registry=caches),
         ),
         # fixed-unroll cost probe: rounds × edge-scan is the quantity
         # under test, so the convergence witness (an extra peel whose
@@ -236,7 +239,11 @@ def main() -> None:
     def run(thunk) -> float:
         t0 = time.time()
         thunk().write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+        wall = time.time() - t0
+        for df in caches:
+            df.unpersist()
+        caches.clear()
+        return wall
 
     results = {}
     path = os.path.join(REPO, "BENCH", "op_scaling.json")
